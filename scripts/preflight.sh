@@ -2,6 +2,7 @@
 # End-of-round preflight gate (VERDICT r8 ask #3): never snapshot a tree
 # that doesn't compile or that plans a banned shape. Run this before ANY
 # round-ending commit, and after every edit that adds a `Declared`.
+# A new consumer of a `Shared` artifact must list it in its `uses`.
 #
 #   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec (~3 min)
 #   scripts/preflight.sh --full   # full `sbt test` instead of the audit only

@@ -31,8 +31,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     bare.
   * PlanAndPropertySpecs pins the Spark half: no declared result on the
   * fixture carries a signed zero in any double/float column.
+  *
+  * `uses` lists the [[Shared]] artifacts `run` reads directly; Bench warms
+  * from it and PlanAuditSpec checks it against the artifacts a build
+  * actually touches.
   */
 final case class Declared(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None)
+    oracle: Option[String] = None,
+    uses: Seq[Shared.Artifact] = Nil) {
+  require(!uses.contains(null),
+    s"$name: an artifact in `uses` is defined below this Declared in its object")
+}

@@ -433,7 +433,7 @@ object ExtrasQ {
     */
   /** dHash-shaped 63-bit fingerprint over the hex rendering in column `h` —
     * shared by [[mmPhash]] and [[mmCaptionPairs]]. */
-  private def phashBits: org.apache.spark.sql.Column =
+  private[graft] def phashBits: org.apache.spark.sql.Column =
     (0 until 63).map { i =>
       (substring(col("h"), 2 * i + 1, 2) < substring(col("h"), 2 * i + 3, 2))
         .cast("long") * lit(1L << i)
@@ -468,6 +468,38 @@ object ExtrasQ {
       FROM ph GROUP BY phash ORDER BY phash"""
     })
 
+  /** Per-document (doc_id, lang, phash, image_ok, caption_ok) gates of
+    * [[mmCaptionPairs]]. Both "sides" of the catalog ⋈ caption join are
+    * per-row derivations of the SAME documents row (the fixture
+    * synthesizes the media catalog from the text), so the r11 shape paid a
+    * second corpus scan plus a doc_id SMJ (two exchanges) to re-unite them
+    * — and ran the 4×md5 + 63-comparison phash pipeline on the UNSPREAD
+    * scan (one partition at fixture scale). One spread projection computes
+    * both gates and the fingerprint in a single pass; h ≡ the catalog's
+    * upper(hex(unhex(...))) since Spark's md5 renders lowercase hex and
+    * hex() uppercase. MultimodalSpec pins (phash, image_ok) to the gates
+    * derived from [[Multimodal.catalog]], row for row.
+    */
+  private[graft] def captionGates(
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+    val mh = graft.functions.Hashing.md5Hash60(col("text"))
+    Tables.spread(t(s, dir, "documents"), "doc_id")
+      .withColumn("__h", mh)
+      .withColumn("h", upper(concat(
+        md5(col("text")), md5(concat(col("text"), lit("a"))),
+        md5(concat(col("text"), lit("b"))), md5(concat(col("text"), lit("c"))))))
+      .withColumn("nw",
+        size(graft.functions.TextFns.words(col("text"))).cast("long"))
+      .withColumn("nc",
+        length(regexp_replace(col("text"), "\\s", "")).cast("long"))
+      .select(col("doc_id"), col("lang"), phashBits.as("phash"),
+        (least((lit(32) + col("__h") % 448).cast("int"),
+          (lit(32) + expr("(__h div 448) % 448")).cast("int")) >= 64)
+          .as("image_ok"),
+        (col("nw").between(5L, 200L) &&
+          col("nc") <= col("nw") * 12L).as("caption_ok"))
+  }
+
   /** Image–caption training-pair curation (the CLIP/LAION data shape): the
     * media catalog joins its caption table 1:1 on the id key, then each pair
     * runs the full curation gauntlet with ATTRIBUTED outcomes — caption gate
@@ -485,33 +517,9 @@ object ExtrasQ {
   val mmCaptionPairs = Declared(
     "mm_caption_pairs",
     (s, dir) => {
-      // both "sides" of the catalog ⋈ caption join are per-row derivations
-      // of the SAME documents row (the fixture synthesizes the media
-      // catalog from the text), so the r11 shape paid a second corpus scan
-      // plus a doc_id SMJ (two exchanges) to re-unite them — and ran the
-      // 4×md5 + 63-comparison phash pipeline on the UNSPREAD scan (one
-      // partition at fixture scale). One spread projection computes both
-      // gates and the fingerprint in a single pass; h ≡ the catalog's
-      // upper(hex(unhex(...))) since Spark's md5 renders lowercase hex and
-      // hex() uppercase. Checkpointed: the keeper election and the funnel
-      // tagging both consume it.
-      val mh = graft.functions.Hashing.md5Hash60(col("text"))
-      val pairs = Tables.spread(t(s, dir, "documents"), "doc_id")
-        .withColumn("__h", mh)
-        .withColumn("h", upper(concat(
-          md5(col("text")), md5(concat(col("text"), lit("a"))),
-          md5(concat(col("text"), lit("b"))), md5(concat(col("text"), lit("c"))))))
-        .withColumn("nw",
-          size(graft.functions.TextFns.words(col("text"))).cast("long"))
-        .withColumn("nc",
-          length(regexp_replace(col("text"), "\\s", "")).cast("long"))
-        .select(col("doc_id"), col("lang"), phashBits.as("phash"),
-          (least((lit(32) + col("__h") % 448).cast("int"),
-            (lit(32) + expr("(__h div 448) % 448")).cast("int")) >= 64)
-            .as("image_ok"),
-          (col("nw").between(5L, 200L) &&
-            col("nc") <= col("nw") * 12L).as("caption_ok"))
-        .localCheckpoint()
+      // checkpointed: the keeper election and the funnel tagging both
+      // consume the gates
+      val pairs = captionGates(s, dir).localCheckpoint()
       val keepers = pairs.filter(col("caption_ok") && col("image_ok"))
         .groupBy(col("phash")).agg(min(col("doc_id")).as("keeper"))
       pairs.join(broadcast(keepers), Seq("phash"), "left")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, Shared, Tables}
 import graft.operators.{Compare, Convert, ParquetMeta, SchemaDiff, SchemaOp}
 import org.apache.spark.sql.functions._
 
@@ -18,27 +18,11 @@ object Ops {
     * to re-sort per query: the first compare pays the scan+sort once, the
     * other two reuse the snapshot (VERDICT r1 #9: 9s → target ≤4s at sf0.1).
     */
-  // single-entry cache keyed by the session OBJECT (reference equality —
-  // identityHashCode can collide across sessions and would hand out a
-  // snapshot bound to a stopped session). Capped at ONE entry: switching
-  // (session, dir) drops the old reference so its checkpoint blocks are
-  // GC-reclaimed (ContextCleaner) instead of pinning executor storage for
-  // the JVM lifetime.
-  private val sortedLineitemCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, org.apache.spark.sql.DataFrame)]()
-
-  private def sortedLineitem(s: org.apache.spark.sql.SparkSession, dir: String) =
-    sortedLineitemCache.synchronized {
-      val cur = sortedLineitemCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val df = t(s, dir, "lineitem")
-          .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-          .localCheckpoint()
-        sortedLineitemCache.set((s, dir, df))
-        df
-      }
-    }
+  private val sortedLineitem = Shared.snapshot("ops_sorted_lineitem") { (s, dir) =>
+    t(s, dir, "lineitem")
+      .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
+      .localCheckpoint()
+  }
 
   /** op 1 `view`: first N rows. The reference shows file order; we order by
     * the primary key so the result is well-defined under parallel scans.
@@ -94,7 +78,8 @@ object Ops {
     },
     Some("""SELECT count(*) AS rows_left, count(*) AS rows_right,
       CAST(0 AS BIGINT) AS n_diffs, CAST(NULL AS BIGINT) AS first_diff_index,
-      true AS is_equal FROM lineitem"""))
+      true AS is_equal FROM lineitem"""),
+    uses = Seq(sortedLineitem))
 
   /** The positional compare of (sorted lineitem, +1-quantity-perturbed
     * lineitem) run ONCE, its ~0.1% DIFF SET snapshotted: op_compare_diff
@@ -105,32 +90,18 @@ object Ops {
     * (600 k wide rows written for a 1-row summary). Both side row counts are
     * equal by construction (a column perturbation drops no rows), so the
     * snapshot plus one count of the sorted side reconstructs the exact
-    * [[Compare.summarize]] output. Fixture-query-layer cache only — same
-    * single-entry, reference-equality discipline as [[sortedLineitem]]; the
+    * [[Compare.summarize]] output. Fixture-query-layer cache only — the
     * operator API stays snapshot-free and is exercised un-composed by
     * op_compare_equal / op_compare_epsilon.
     */
-  private val diffSnapCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String,
-      org.apache.spark.sql.DataFrame, Long)]()
-
-  private def diffArtifacts(
-      s: org.apache.spark.sql.SparkSession, dir: String) =
-    diffSnapCache.synchronized {
-      val cur = diffSnapCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) (cur._3, cur._4)
-      else {
-        val sorted = sortedLineitem(s, dir)
-        val perturbed = sorted.withColumn("l_quantity",
-          when(col("l_orderkey") % 1000 === 0, col("l_quantity") + 1.0)
-            .otherwise(col("l_quantity")))
-        val (joined, rowEqual) = Compare.positionalJoin(s, sorted, perturbed, epsilon = 0.0)
-        val diffs = joined.filter(!rowEqual).localCheckpoint()
-        val n = sorted.count()
-        diffSnapCache.set((s, dir, diffs, n))
-        (diffs, n)
-      }
-    }
+  private val diffArtifacts = Shared.snapshot("ops_compare_diffs") { (s, dir) =>
+    val sorted = sortedLineitem(s, dir)
+    val perturbed = sorted.withColumn("l_quantity",
+      when(col("l_orderkey") % 1000 === 0, col("l_quantity") + 1.0)
+        .otherwise(col("l_quantity")))
+    val (joined, rowEqual) = Compare.positionalJoin(s, sorted, perturbed, epsilon = 0.0)
+    (joined.filter(!rowEqual).localCheckpoint(), sorted.count())
+  }
 
   /** op 7 `compare`, diff path: perturb every row with l_orderkey % 1000 = 0
     * by +1 quantity; compare finds exactly those rows, positionally.
@@ -158,7 +129,8 @@ object Ops {
         count(*) AS n_diffs,
         min(idx) AS first_diff_index,
         false AS is_equal
-      FROM indexed WHERE l_orderkey % 1000 = 0"""))
+      FROM indexed WHERE l_orderkey % 1000 = 0"""),
+    uses = Seq(diffArtifacts))
 
   /** op 7 `compare`, epsilon path: +0.005 on a double column is invisible at
     * eps=0.01 but not at eps=0 → is_equal true with epsilon.
@@ -172,7 +144,8 @@ object Ops {
     },
     Some("""SELECT count(*) AS rows_left, count(*) AS rows_right,
       CAST(0 AS BIGINT) AS n_diffs, CAST(NULL AS BIGINT) AS first_diff_index,
-      true AS is_equal FROM lineitem"""))
+      true AS is_equal FROM lineitem"""),
+    uses = Seq(sortedLineitem))
 
   /** op 6 `view-parquet-meta`: footer stats vs DuckDB parquet_metadata().
     * The oracle path is the fixed t2-verify scale factor (sf0.01).
@@ -316,7 +289,8 @@ object Ops {
         l_quantity + 1.0 AS r4, l_extendedprice AS r5, l_discount AS r6, l_tax AS r7,
         l_returnflag AS r8, l_linestatus AS r9, l_shipdate AS r10
       FROM li WHERE l_orderkey % 1000 = 0
-      ORDER BY idx LIMIT 1"""))
+      ORDER BY idx LIMIT 1"""),
+    uses = Seq(diffArtifacts))
 
   /** SQL-queryable information_schema through the `query` op (reference
     * main.rs:111 enables it session-wide; README demos
@@ -423,25 +397,14 @@ object Ops {
     * float), written once per (session, dir) — the diff itself reads only
     * footers.
     */
-  private val diffRightFor = new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def schemaDiffRight(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val out = Tables.scratch("schema_diff_right.parquet")
-    Tables.cachedFixture(diffRightFor, dir)(
-      new java.io.File(out, "_SUCCESS").exists()) {
-      t(s, dir, "events")
-        .drop("props")
-        .withColumn("value", col("value").cast("float"))
-        .withColumn("session_id", concat(lit("s"), col("user_id")))
-        .write.mode("overwrite").parquet(out)
-    }
-    out
-  }
-
-  /** Bench warmup hook: pre-write the evolved-snapshot fixture. */
-  private[graft] def warmFixtures(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    schemaDiffRight(s, dir); ()
+  private val diffRightPath = Tables.scratch("schema_diff_right.parquet")
+  private val diffRight = Shared.fixture("schema_diff_right")(
+    _ => new java.io.File(diffRightPath, "_SUCCESS").exists()) { (s, dir) =>
+    t(s, dir, "events")
+      .drop("props")
+      .withColumn("value", col("value").cast("float"))
+      .withColumn("session_id", concat(lit("s"), col("user_id")))
+      .write.mode("overwrite").parquet(diffRightPath)
   }
 
   /** Schema drift report between two snapshots of the events table
@@ -452,22 +415,25 @@ object Ops {
     */
   val schemaDiffQ = Declared(
     "op_schema_diff",
-    (s, dir) => SchemaDiff.diff(
-      s, t(s, dir, "events"), s.read.parquet(schemaDiffRight(s, dir))),
+    (s, dir) => {
+      diffRight(s, dir)
+      SchemaDiff.diff(s, t(s, dir, "events"), s.read.parquet(diffRightPath))
+    },
     Some(s"""WITH l AS (
         SELECT column_name, column_type AS left_type
         FROM (DESCRIBE SELECT * FROM events)),
       r AS (
         SELECT column_name, column_type AS right_type
         FROM (DESCRIBE SELECT * FROM read_parquet(
-          '${Tables.scratch("schema_diff_right.parquet")}/*.parquet')))
+          '$diffRightPath/*.parquet')))
       SELECT column_name, left_type, right_type,
         CASE WHEN left_type IS NULL THEN 'added'
              WHEN right_type IS NULL THEN 'removed'
              WHEN left_type <> right_type THEN 'type_changed'
              ELSE 'same' END AS status
       FROM l FULL OUTER JOIN r USING (column_name)
-      ORDER BY column_name"""))
+      ORDER BY column_name"""),
+    uses = Seq(diffRight))
 
   /** Keyed compare, drift-attribution view: for rows on both sides of a
     * snapshot pair, how many changed PER COLUMN — op_compare_keyed says how

@@ -31,7 +31,7 @@ object DedupDiag {
 
     // ngram family: shared banded candidates, then the declared verify
     val cand = t("banded_candidates_build") {
-      graft.queries.DedupQ.warmShared(spark, dir)
+      graft.queries.DedupQ.bandedCandidates(spark, dir)
     }
     println(s"DIAG banded_candidate_pairs ${cand.count()}")
     val out = t("ngram_verify") {

@@ -477,6 +477,20 @@ class MultimodalSpec extends AnyFunSuite {
     assert(joined == "abcdefghij")
   }
 
+  test("mm_caption_pairs' inline (phash, image_ok) gates equal the catalog's, row for row") {
+    import org.apache.spark.sql.functions._
+    val docs = Tables.t(spark, TestSpark.sf, "documents")
+    val inline = queries.ExtrasQ.captionGates(spark, TestSpark.sf)
+      .select(col("doc_id"), col("phash"), col("image_ok"))
+    val derived = Multimodal.catalog(docs)
+      .select(col("doc_id"), upper(hex(col("blob"))).as("h"),
+        (least(col("meta.width"), col("meta.height")) >= 64).as("image_ok"))
+      .select(col("doc_id"), queries.ExtrasQ.phashBits.as("phash"), col("image_ok"))
+    assert(inline.count() == docs.count())
+    assert(inline.exceptAll(derived).isEmpty && derived.exceptAll(inline).isEmpty,
+      "inline caption-pair gates diverged from Multimodal.catalog")
+  }
+
   test("decode features are deterministic and complete") {
     val docs = Tables.t(spark, TestSpark.sf, "documents").limit(10)
     val f = Multimodal.decodeFeatures(spark, Multimodal.catalog(docs)).collect()

@@ -535,19 +535,41 @@ class PlanAuditSpec extends AnyFunSuite {
     "dq_profile"         // 1-row distinct-counter × 1-row min/max-card spine (r12)
   )
 
+  /** Every declared query built once, traced: the result (or the build's
+    * failure) and the [[Shared]] artifacts the build read directly. The
+    * audits below all read this one pass.
+    */
+  private lazy val builds
+      : Seq[(Declared, scala.util.Try[org.apache.spark.sql.DataFrame], Set[Shared.Artifact])] =
+    SparkEntry.declared.map { d =>
+      val (df, read) = Shared.traced(scala.util.Try(d.run(spark, TestSpark.sf)))
+      (d, df, read)
+    }
+
   test("no unplanned cartesian or nested-loop joins anywhere") {
-    val offenders = SparkEntry.declared
-      .filterNot(d => allowedCartesian.contains(d.name))
-      .filterNot(d => d.name.startsWith("op_") || d.name == "stream_window_agg" ||
-        d.name == "mm_decode_features" || d.name == "dedup_minhash")
-      .flatMap { d =>
+    val offenders = builds
+      .filterNot { case (d, _, _) => allowedCartesian.contains(d.name) }
+      .filterNot { case (d, _, _) => d.name.startsWith("op_") || d.name == "stream_window_agg" ||
+        d.name == "mm_decode_features" || d.name == "dedup_minhash" }
+      .flatMap { case (d, df, _) =>
         try {
-          val plan = d.run(spark, TestSpark.sf).queryExecution.executedPlan.toString
+          val plan = df.get.queryExecution.executedPlan.toString
           if (plan.contains("CartesianProduct") ||
               plan.contains("BroadcastNestedLoopJoin")) Some(d.name) else None
         } catch { case _: Throwable => None }
       }
     assert(offenders.isEmpty, s"unexpected cartesian/BNLJ in: $offenders")
+  }
+
+  /** Bench warms from `uses`, so a consumer that omits its artifact is
+    * probed cold and a stale entry warms for nothing.
+    */
+  test("every declared query's uses equals the shared artifacts its build reads") {
+    val wrong = builds.collect { case (d, df, read) if read != d.uses.toSet =>
+      s"${d.name}: uses ${d.uses.mkString("[", ", ", "]")}, read ${read.mkString("[", ", ", "]")}" +
+        df.failed.map(e => s" (build failed: $e)").getOrElse("")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n  ", "\n  ", ""))
   }
 
   /** A Window with NO partition keys sorts its entire input on one task —
@@ -568,12 +590,12 @@ class PlanAuditSpec extends AnyFunSuite {
   )
 
   test("no unpartitioned (single-reducer) window operators anywhere") {
-    val offenders = SparkEntry.declared
-      .filterNot(d => d.name.startsWith("op_") || d.name.startsWith("stream_"))
-      .filterNot(d => allowedGlobalWindow.contains(d.name))
-      .flatMap { d =>
+    val offenders = builds
+      .filterNot { case (d, _, _) => d.name.startsWith("op_") || d.name.startsWith("stream_") }
+      .filterNot { case (d, _, _) => allowedGlobalWindow.contains(d.name) }
+      .flatMap { case (d, df, _) =>
         try {
-          val bad = d.run(spark, TestSpark.sf).queryExecution.optimizedPlan.collect {
+          val bad = df.get.queryExecution.optimizedPlan.collect {
             case w: org.apache.spark.sql.catalyst.plans.logical.Window
                 if w.partitionSpec.isEmpty => w
           }

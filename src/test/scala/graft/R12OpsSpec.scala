@@ -259,19 +259,28 @@ class R12OpsSpec extends AnyFunSuite {
   test("bench calm gate: contended run never overwrites a calm file of record") {
     val calm = Some("""{"metric":"total","value":1.0,"contended":false}""")
     val noisy = Some("""{"metric":"total","value":1.0,"contended":true}""")
+    val sf = "/data/sf0.1"
+    def target(contended: Boolean, existing: Option[String], at: String = sf, cpus: Int = 32) =
+      Bench.latestWriteTarget("bench_full_latest.json", contended, existing, at, cpus)
     // the r11 failure mode, now diverted
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true, calm)
-      == "bench_full_latest.contended.json")
+    assert(target(contended = true, calm) == "bench_full_latest.contended.json")
     // calm capture always lands in place
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = false, calm)
-      == "bench_full_latest.json")
+    assert(target(contended = false, calm) == "bench_full_latest.json")
     // nothing calm to protect: first write, or an unattested legacy file
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true, None)
-      == "bench_full_latest.json")
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true,
+    assert(target(contended = true, None) == "bench_full_latest.json")
+    assert(target(contended = true,
       Some("""{"metric":"total","value":1.0}""")) == "bench_full_latest.json")
     // a contended file of record is fair game for a newer contended capture
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true, noisy)
-      == "bench_full_latest.json")
+    assert(target(contended = true, noisy) == "bench_full_latest.json")
+    // the r13 failure mode: a calm capture at another sf or cpu count never
+    // replaces the reference, whatever either side's calm attestation
+    val ref = Some(s"""{"metric":"total","sf":"$sf","cpus":32,"contended":false}""")
+    assert(target(contended = false, ref) == "bench_full_latest.json")
+    assert(target(contended = false, ref, cpus = 4) == "bench_full_latest.sf0.1.c4.json")
+    assert(target(contended = false, ref, at = "/data/sf0.001") ==
+      "bench_full_latest.sf0.001.c32.json")
+    assert(target(contended = true, ref, at = "/data/sf0.001", cpus = 4) ==
+      "bench_full_latest.sf0.001.c4.json")
   }
+
 }

@@ -64,7 +64,7 @@ class R13OpsSpec extends AnyFunSuite {
   test("rec: evalShared's one-pass eligible fold equals the anti-join formulation") {
     val spark = TestSpark.spark
     val sf = TestSpark.sf
-    val (elig, _, _, _, _) = queries.RecQ.evalShared(spark, sf)
+    val (elig, _, _, _, _, _) = queries.RecQ.evalShared(spark, sf)
     val tagged = queries.RecQ.taggedBaskets(spark, sf)
     val test = tagged.filter(col("is_test")).select(col("u"), col("i"))
     val train = tagged.filter(!col("is_test")).select(col("u"), col("i"))
@@ -156,5 +156,13 @@ class R13OpsSpec extends AnyFunSuite {
     // the usable case does flag
     assert(Bench.driftSuspects(Some(mk(false, "/root/testdata/sf0.1", 32)),
       "/root/testdata/sf0.1", 32, now)._2.contains("\"a\":9.0"))
+    // a calm, matching reference whose `queries` map is empty or unparsable
+    // compares nothing, so it is not usable either
+    Seq("{}", "{\"a\":\"x\"}").foreach { q =>
+      val empty = mk(false, "/data/sf0.1", 32).replace("{\"a\":1.0}", q)
+      assert(Bench.driftSuspects(Some(empty), "/data/sf0.1", 32, now) ==
+        ("""{"usable":false,"calm":true,"same_sf":true,"same_cpus":true,"ref_queries":0}""",
+          "{}"), empty)
+    }
   }
 }
