@@ -3,8 +3,10 @@
 # that doesn't compile or that plans a banned shape. Run this before ANY
 # round-ending commit, and after every edit that adds a `Declared`.
 # A new consumer of a `Shared` artifact must list it in its `uses`.
+# CliSpec (seconds) pins the CLI's output path: a change to ParquetMeta or the
+# cli.Show renderer that alters a byte of output fails here.
 #
-#   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec (~3 min)
+#   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec + CliSpec (~3 min)
 #   scripts/preflight.sh --full   # full `sbt test` instead of the audit only
 #
 # Exit 0 = safe to snapshot. Anything else = fix before committing.
@@ -13,7 +15,7 @@ cd "$(dirname "$0")/.."
 # sbt commands as an ARRAY — the earlier single-string form word-split
 # 'testOnly graft.PlanAuditSpec' into tokens with literal quote chars,
 # which sbt 1.10 refuses to parse, so the gate failed on every default run
-TARGET=(Test/compile 'testOnly graft.PlanAuditSpec')
+TARGET=(Test/compile 'testOnly graft.PlanAuditSpec graft.CliSpec')
 [ "${1:-}" = "--full" ] && TARGET=(test)
 echo "[preflight] sbt compile + ${TARGET[*]}" >&2
 sbt -batch compile "${TARGET[@]}"

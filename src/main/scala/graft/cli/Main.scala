@@ -25,12 +25,18 @@ import org.apache.spark.sql.SparkSession
   * ([[Compare.summarizeByKey]]) — one full-outer equi-join, no global sort or
   * positional snapshot, so it's the at-scale path. Positional compare stays
   * the default for bdt parity (keyless files).
+  *
+  * The SparkSession is built when a command first needs it:
+  * `view-parquet-meta` reads the footer and prints through [[Show]], so it
+  * never boots Spark. Every command runs its result plan once — `compare` and
+  * `schema-diff` print the rows they collected and take the exit code from
+  * them, and `query --output` writes without printing (reference parity).
   */
 object Main {
 
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
       .withExtensions(new graft.GraftExtensions) // native kernels in SQL
@@ -38,25 +44,21 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val exit = dispatch(spark, args.toList)
-      spark.stop()
-      if (exit != 0) sys.exit(exit)
-    } catch {
-      case e: Exception =>
-        System.err.println(s"Error: ${e.getMessage}")
-        spark.stop()
-        sys.exit(-1)
-    }
+    var booted: Option[SparkSession] = None
+    // a lazy val, since dispatch's by-name session is re-evaluated on each use
+    lazy val spark = { booted = Some(session()); booted.get }
+    val exit = dispatch(spark, args.toList)
+    booted.foreach(_.stop())
+    if (exit != 0) sys.exit(exit)
   }
 
   /** Bad invocation (missing positional, nothing to do): usage to stderr +
-    * exit 1, distinct from runtime failures (exit -1 via the main catch).
+    * exit 1, distinct from runtime failures (`Error: …` and exit -1).
     */
   private final case class UsageError(msg: String) extends RuntimeException(msg)
 
@@ -86,11 +88,15 @@ object Main {
     loop(args)
   }
 
-  def dispatch(spark: SparkSession, args: List[String]): Int =
+  /** Runs one command; `spark` is forced only by commands that need it. */
+  def dispatch(spark: => SparkSession, args: List[String]): Int =
     try dispatchImpl(spark, args)
-    catch { case UsageError(m) => System.err.println(m); 1 }
+    catch {
+      case UsageError(m) => System.err.println(m); 1
+      case e: Exception => System.err.println(s"Error: ${e.getMessage}"); -1
+    }
 
-  private def dispatchImpl(spark: SparkSession, args: List[String]): Int = args match {
+  private def dispatchImpl(spark: => SparkSession, args: List[String]): Int = args match {
     case "view" :: rest =>
       val path = required(positional(rest), 1, "view <file> [--limit N]").head
       val limit = opt(rest, "--limit").map(_.toInt).getOrElse(10)
@@ -109,8 +115,8 @@ object Main {
       0
 
     case "schema" :: rest =>
-      SchemaOp.describePath(spark, required(positional(rest), 1, "schema <file>").head)
-        .show(1000, truncate = false)
+      val path = required(positional(rest), 1, "schema <file>").head
+      SchemaOp.describePath(spark, path).show(1000, truncate = false)
       0
 
     case "count" :: rest =>
@@ -133,15 +139,18 @@ object Main {
           new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))))
         .getOrElse(throw UsageError(
           "usage: query [--table f]... [--tables dir] (--sql s | --sql-file f) [--output p] [--verbose]"))
-      QueryRunner.run(spark, opts(rest, "--table"), opt(rest, "--tables"), sql,
-        opt(rest, "--output"), flag(rest, "--verbose") || flag(rest, "-v"))
-        .show(100, truncate = false)
+      val output = opt(rest, "--output")
+      val df = QueryRunner.run(spark, opts(rest, "--table"), opt(rest, "--tables"), sql,
+        output, flag(rest, "--verbose") || flag(rest, "-v"))
+      // print or write, like the reference (main.rs:190-224): never both
+      if (output.isEmpty) df.show(100, truncate = false)
       0
 
     case "view-parquet-meta" :: rest =>
       val path = required(positional(rest), 1, "view-parquet-meta <file>").head
-      ParquetMeta.fileInfo(spark, path).show(truncate = false)
-      ParquetMeta.metadata(spark, path).show(1000, truncate = false)
+      val footer = ParquetMeta.footer(path, ParquetMeta.hadoopConf())
+      println(Show.table(ParquetMeta.infoSchema.fieldNames, Seq(footer.info)))
+      println(Show.table(ParquetMeta.chunkSchema.fieldNames, footer.chunks, 1000))
       0
 
     case "compare" :: rest =>
@@ -164,13 +173,14 @@ object Main {
             epsilon = epsilon,
             noHeaderRow = flag(rest, "--no-header-row"))
       }
-      result.show(truncate = false)
+      val summary = result.collect()
+      println(Show.table(result.columns, summary))
       // exit -1 on mismatch like the reference (main.rs:104-107,241-246)
-      if (result.head().getBoolean(4)) 0 else -1
+      if (summary.head.getBoolean(4)) 0 else -1
 
     case "describe" :: rest =>
-      val df = Formats.read(spark,
-        required(positional(rest), 1, "describe <file> [--columns c1,c2]").head)
+      val path = required(positional(rest), 1, "describe <file> [--columns c1,c2]").head
+      val df = Formats.read(spark, path)
       val numeric = df.schema.fields.collect {
         case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
       }.toSeq
@@ -193,9 +203,9 @@ object Main {
       // when schemas differ (gate semantics mirroring compare's)
       val ps = required(positional(rest), 2, "schema-diff <left> <right>")
       val d = SchemaDiff.diff(spark, Formats.read(spark, ps(0)), Formats.read(spark, ps(1)))
-      d.show(1000, truncate = false)
-      if (d.filter(org.apache.spark.sql.functions.col("status") =!=
-        "same").isEmpty) 0 else -1
+      val rows = d.collect()
+      println(Show.table(d.columns, rows, 1000))
+      if (rows.forall(_.getAs[String]("status") == "same")) 0 else -1
 
     case other =>
       System.err.println(s"unknown command: ${other.headOption.getOrElse("")}")

@@ -1,10 +1,12 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import java.time.{Instant, LocalDateTime, ZoneOffset}
@@ -19,6 +21,8 @@ import scala.jdk.CollectionConverters._
   * No Spark SQL path exists for footers; this uses parquet-hadoop directly
   * (ships in /opt/spark/jars). Stat values are rendered as strings using
   * DuckDB `parquet_metadata()` conventions so the output is oracle-checkable.
+  * [[footer]] is the one reader; the CLI renders its rows directly, the
+  * DataFrame wrappers serve `op_parquet_meta` and in-session callers.
   */
 object ParquetMeta {
 
@@ -57,7 +61,8 @@ object ParquetMeta {
   private def specTypeName(name: String): String =
     if (name == "BINARY") "BYTE_ARRAY" else name
 
-  private val schema = StructType(Seq(
+  /** One row per (row group, column chunk): the `metadata` schema. */
+  val chunkSchema: StructType = StructType(Seq(
     StructField("row_group_id", LongType, nullable = false),
     StructField("row_group_num_rows", LongType, nullable = false),
     StructField("column_id", LongType, nullable = false),
@@ -69,17 +74,41 @@ object ParquetMeta {
     StructField("stats_max_value", StringType, nullable = true),
     StructField("compression", StringType, nullable = false)))
 
-  /** One row per (row group, column chunk). Footer-only read — no data pages
-    * touched, so this is O(row-groups), not O(data).
+  /** File-level footer summary (version, created_by, totals) —
+    * reference parquet.rs:15-35: the `fileInfo` schema.
     */
-  def metadata(spark: SparkSession, path: String): DataFrame = {
-    val input = HadoopInputFile.fromPath(
-      new Path(path), spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(input)
+  val infoSchema: StructType = StructType(Seq(
+    StructField("created_by", StringType, nullable = true),
+    StructField("num_rows", LongType, nullable = false),
+    StructField("num_row_groups", LongType, nullable = false),
+    StructField("num_columns", IntegerType, nullable = false)))
+
+  /** A footer as plain rows: `info` in [[infoSchema]], `chunks` in
+    * [[chunkSchema]] ordered by (row group, column).
+    */
+  final case class Footer(info: Row, chunks: Seq[Row])
+
+  /** The Hadoop conf a SparkContext would start from, without one: the
+    * `spark.hadoop.*` system properties with the prefix stripped, and Spark's
+    * `spark.buffer.size` as `io.file.buffer.size`.
+    */
+  def hadoopConf(): Configuration = {
+    val sparkConf = new SparkConf()
+    val conf = new Configuration()
+    sparkConf.getAllWithPrefix("spark.hadoop.").foreach { case (k, v) => conf.set(k, v) }
+    conf.set("io.file.buffer.size", sparkConf.get("spark.buffer.size", "65536"))
+    conf
+  }
+
+  /** Opens the file once and reads only its footer — no data pages touched,
+    * so this is O(row-groups), not O(data). Needs no SparkSession.
+    */
+  def footer(path: String, conf: Configuration): Footer = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
     try {
-      val footer = reader.getFooter
-      val msgType = footer.getFileMetaData.getSchema
-      val rows = footer.getBlocks.asScala.zipWithIndex.flatMap { case (block, rgId) =>
+      val meta = reader.getFooter
+      val msgType = meta.getFileMetaData.getSchema
+      val chunks = meta.getBlocks.asScala.zipWithIndex.flatMap { case (block, rgId) =>
         block.getColumns.asScala.zipWithIndex.map { case (cc, colId) =>
           val pt = msgType.getType(cc.getPath.toArray: _*).asPrimitiveType()
           val stats = cc.getStatistics
@@ -94,31 +123,21 @@ object ParquetMeta {
             cc.getValueCount, nulls, minV, maxV, cc.getCodec.name)
         }
       }
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+      Footer(
+        Row(meta.getFileMetaData.getCreatedBy, reader.getRecordCount,
+          meta.getBlocks.size.toLong, msgType.getFieldCount),
+        chunks.toSeq)
     } finally reader.close()
   }
 
-  /** File-level footer summary (version, created_by, totals) —
-    * reference parquet.rs:15-35.
-    */
-  def fileInfo(spark: SparkSession, path: String): DataFrame = {
-    val input = HadoopInputFile.fromPath(
-      new Path(path), spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(input)
-    try {
-      val footer = reader.getFooter
-      val rows = Seq(Row(
-        footer.getFileMetaData.getCreatedBy,
-        reader.getRecordCount,
-        footer.getBlocks.size.toLong,
-        footer.getFileMetaData.getSchema.getFieldCount))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(
-          StructField("created_by", StringType, nullable = true),
-          StructField("num_rows", LongType, nullable = false),
-          StructField("num_row_groups", LongType, nullable = false),
-          StructField("num_columns", IntegerType, nullable = false))))
-    } finally reader.close()
-  }
+  private def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+  /** [[footer]]'s chunk rows as a DataFrame. */
+  def metadata(spark: SparkSession, path: String): DataFrame =
+    frame(spark, footer(path, spark.sparkContext.hadoopConfiguration).chunks, chunkSchema)
+
+  /** [[footer]]'s summary row as a DataFrame. */
+  def fileInfo(spark: SparkSession, path: String): DataFrame =
+    frame(spark, Seq(footer(path, spark.sparkContext.hadoopConfiguration).info), infoSchema)
 }
